@@ -95,18 +95,22 @@ object Headings {
     else heading
   }
 
-  /** apply_read_aloud_rules (analyzer.py:212-271): running-head set and
-    * exclusion patterns force readAloud=false. */
+  /** apply_read_aloud_rules (analyzer.py:212-271): the detected
+    * running heads of `analyses` and the exclusion patterns force
+    * readAloud=false. */
   def applyReadAloudRules(
       headings: Seq[Heading],
       analyses: Vector[HeadingAnalysis]
-  ): Vector[Heading] = {
-    if (headings.isEmpty) return Vector.empty
-    val runningHeadTexts = analyses.iterator.filter(_.isRunningHead).map(_.text).toSet
+  ): Vector[Heading] =
+    applyReadAloudRules(headings, analyses.iterator.filter(_.isRunningHead).map(_.text).toSet)
+
+  /** apply_read_aloud_rules over a resolved running-head set (dash-
+    * normalized texts): a heading in the set or matching an exclusion
+    * pattern gets readAloud=false. */
+  def applyReadAloudRules(headings: Seq[Heading], runningHeadTexts: Set[String]): Vector[Heading] =
     headings.iterator.map { h =>
       val excluded = runningHeadTexts.contains(Normalize.dashes(h.text)) ||
         matchExclusionPattern(h.text).isDefined
       if (excluded) Heading(h.level, h.text, readAloud = false) else h
     }.toVector
-  }
 }

@@ -346,7 +346,7 @@ case class IntersectCountExpr(left: Expression, right: Expression)
   * size))` shape it replaces duplicated the FULL members array into
   * every exploded row and then built a sliced copy per row: O(m²)
   * array-element materializations per bucket versus this generator's
-  * O(m²) bare pair rows (BenchExtra/EmbedProbe: the expansion stage of
+  * O(m²) bare pair rows (EmbedProbe: the expansion stage of
   * a 50 M-pair corpus spent 10-18 s in those copies). Emission order per
   * bucket is (0,1), (0,2), …, (1,2), … over the sort_array'd members —
   * the same pair SET the two-generate shape produced. */

@@ -124,8 +124,23 @@ object Dedup {
     * identical at gate tiers. Spill-safe: the sort is ExternalSorter.
     * Row equality is Spark's value-based [[org.apache.spark.sql.Row]]
     * equals (null-safe; binary-aware), matching distinct's grouping for
-    * every atomic column type the pair streams carry. */
+    * every atomic column type the pair streams carry. Float, double,
+    * array, map and struct columns are rejected when the plan is built:
+    * for them `Row.equals` is not guaranteed to agree with Spark's
+    * grouping equality (a NaN or a binary value nested in an array
+    * compares unequal to an equal copy; Spark normalizes NaN and -0.0
+    * before it groups floats), so a duplicate could silently survive. */
   private[graft] def sortedDistinct(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types._
+    df.schema.fields.foreach { f =>
+      f.dataType match {
+        case FloatType | DoubleType | _: ArrayType | _: MapType | _: StructType =>
+          throw new IllegalArgumentException(
+            s"sortedDistinct: column `${f.name}` has type ${f.dataType.simpleString}; " +
+              "row equality is only exact for atomic non-floating columns")
+        case _ =>
+      }
+    }
     val cols = df.columns.map(col).toIndexedSeq
     val sorted = df.repartition(cols: _*).sortWithinPartitions(cols: _*)
     val enc = org.apache.spark.sql.Encoders.row(sorted.schema)

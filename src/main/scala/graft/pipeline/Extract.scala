@@ -38,13 +38,23 @@ object Extract {
 
     // convert_book (cli.py:137-196): analyze all headings across pages,
     // detect running head, rewrite read_aloud.
-    val allHeadings: Vector[Heading] = parsed.pages.flatMap(_.elements).collect {
-      case h: Heading => h
-    }
+    val allHeadings = headingsOf(parsed)
     val analyses0 = Headings.analyze(allHeadings)
     val analyses = Headings.detectRunningHead(analyses0, parsed.pages.length, runningHeadThreshold)
-    val processed = Headings.applyReadAloudRules(allHeadings, analyses)
-    // original heading identity -> processed (cli.py:103-135 heading_map)
+    emit(docId, parsed, Headings.applyReadAloudRules(allHeadings, analyses))
+  }
+
+  /** Every heading of the parsed document, in page-then-element order
+    * (_extract_headings) — the order [[emit]] consumes `processed` in. */
+  private[pipeline] def headingsOf(parsed: PageParser.ParseOutput): Vector[Heading] =
+    parsed.pages.flatMap(_.elements).collect { case h: Heading => h }
+
+  /** Span emission in reference page order. `processed` holds the
+    * read-aloud-rewritten [[headingsOf]] of `parsed`, one per heading in
+    * the same order (cli.py:103-135 heading_map). Both [[extractLines]]
+    * and [[ExtractRelational.spans]] emit through here. */
+  private[pipeline] def emit(docId: String, parsed: PageParser.ParseOutput,
+      processed: Vector[Heading]): DocResult = {
     val processedIter = processed.iterator
 
     val spans = Vector.newBuilder[OutSpan]
@@ -160,9 +170,10 @@ object PhashDedup {
   *     fixed) so a heavy-tail doc (~2% of the corpus at 150-400 pages)
   *     delays one small partition, not a core-sized one;
   *   - AQE skew-split on the shuffling paths (ExtractRelational's
-  *     heading agg; the LSH bucket joins), where rows ARE divisible;
-  *   - the relational path (ExtractRelational) for docs too large for
-  *     one row, where the heading agg distributes across pages.
+  *     heading agg; the LSH bucket joins), where rows ARE divisible.
+  * No extraction path lifts the one-row-per-doc bound: ExtractRelational
+  * shuffles heading rows, but both of its passes parse the whole doc in
+  * one row.
   */
 object Skew {
   import org.apache.spark.sql.DataFrame

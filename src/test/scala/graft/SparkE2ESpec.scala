@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.io.SyntheticCorpus
+import graft.model.{InputDoc, OutSpan, Span}
 import graft.pipeline.{Checkpoint, Extract, ExtractRelational}
 
 /** Distributed end-to-end invariants on the synthetic corpus:
@@ -35,6 +36,75 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val relational = ExtractRelational.spans(docs).toDF()
     assert(fused.count() == relational.count())
     assert(fused.except(relational).isEmpty && relational.except(fused).isEmpty)
+  }
+
+  /** One input doc from page bodies: a page marker per page, then the
+    * body lines. Spans are stored in reverse so both paths must sort by
+    * offset. */
+  private def pagedDoc(id: String, pages: Seq[String]*): InputDoc = {
+    val lines = pages.zipWithIndex.flatMap { case (body, i) =>
+      val p = i + 1
+      (f"--- Page $p (page_$p%04d.png) ---" +: body) :+ ""
+    }
+    InputDoc(id, lines.zipWithIndex.map { case (t, o) => Span("text", t, "", o) }.reverse)
+  }
+
+  private val body = Seq("本文です。", "")
+  private def h(text: String, level: Int = 1) = Seq("#" * level + " " + text, "") ++ body
+
+  /** Running-head edge cases. The threshold is max(pages * 0.5, 2). */
+  private lazy val edgeDocs: Seq[InputDoc] = Seq(
+    // count 3 == max(6 * 0.5, 2): flagged
+    pagedDoc("at_threshold", h("柱"), h("柱"), h("柱"), body, body, body),
+    // count 2, one below the threshold: kept
+    pagedDoc("below_threshold", h("柱"), h("柱"), body, body, body, body),
+    // 甲 and 乙 tie on count 3; 甲 is seen first (and sorts after 乙)
+    pagedDoc("tie", h("甲"), h("乙"), h("甲"), h("乙"), h("甲"), h("乙")),
+    // two dash variants fold to one text of count 3; neither alone reaches it
+    pagedDoc("dashes", h("第一部—序"), h("第一部—序"), h("第一部―序"), body, body, body),
+    // 丙 counts 5 but its mode level is 2, so 丁 (count 4 == max(8 * 0.5, 2)) wins
+    pagedDoc("mode_level", h("丙"), h("丙"), h("丙", 2), h("丙", 2) ++ h("丁"),
+      h("丙", 2) ++ h("丁"), h("丁"), h("丁"), body),
+    InputDoc("no_markers", Seq("# 見出し", "", "本文です。").zipWithIndex
+      .map { case (t, o) => Span("text", t, "", o) }),
+    InputDoc("empty", Seq.empty))
+
+  /** Both extraction paths over `docs`: the same spans, every column,
+    * as an exact multiset. Returns the fused output and the executed
+    * relational plan. */
+  private def assertPathsEqual(docs: Dataset[InputDoc]): (Seq[OutSpan], String) = {
+    def sorted(ds: Dataset[OutSpan]) = ds.collect().toSeq.sortBy(s => (s.doc_id, s.offset))
+    val fused = sorted(Extract.spans(docs))
+    val relational = ExtractRelational.spans(docs)
+    assert(sorted(relational) == fused)
+    (fused, relational.queryExecution.executedPlan.toString)
+  }
+
+  test("fused == relational on running-head edge cases, every column") {
+    val ss = spark; import ss.implicits._
+    val (out, _) = assertPathsEqual(edgeDocs.toDS().repartition(3))
+    // the cases exercise what they claim: exactly these headings are silenced
+    val silenced = out.filter(s => s.kind == "heading" && !s.read_aloud)
+      .map(s => (s.doc_id, s.text)).toSet
+    assert(silenced == Set(("at_threshold", "柱"), ("tie", "甲"), ("dashes", "第一部—序"),
+      ("dashes", "第一部―序"), ("mode_level", "丁")))
+    assert(out.count(s => s.doc_id == "below_threshold" && s.kind == "heading") == 2)
+    assert(!out.exists(s => s.doc_id == "no_markers" || s.doc_id == "empty"))
+  }
+
+  test("fused == relational with broadcast joins disabled (SortMergeJoin plan)") {
+    val ss = spark; import ss.implicits._
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      keys.foreach(spark.conf.set(_, "-1"))
+      val (_, plan) = assertPathsEqual(corpus(20).union(edgeDocs.toDS()))
+      assert(plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"), plan)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   test("extraction is parallelism-independent (4 vs 1 partitions)") {
@@ -349,6 +419,19 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val simA = graft.ops.Dedup.simhashPairs(a, maxDist = 16)
     val simB = graft.ops.Dedup.simhashPairs(b, maxDist = 16)
     assert(simA.except(simB).isEmpty && simB.except(simA).isEmpty)
+  }
+
+  test("sortedDistinct rejects columns whose Row equality is inexact") {
+    import org.apache.spark.sql.functions._
+    val base = spark.range(4).select((col("id") % 2).as("id"), lit("x").as("s"), lit(1).as("i"))
+    assert(graft.ops.Dedup.sortedDistinct(base).count() == 2)
+    for ((name, c) <- Seq("d" -> lit(0.5), "f" -> lit(0.5f), "a" -> array(lit(1L)),
+        "m" -> map(lit(1), lit(2)), "st" -> struct(lit(1)))) {
+      val e = intercept[IllegalArgumentException] {
+        graft.ops.Dedup.sortedDistinct(base.withColumn(name, c))
+      }
+      assert(e.getMessage.contains(s"`$name`"), e.getMessage)
+    }
   }
 
   test("minhash hash-family seam: full-overlap recall is family-independent") {

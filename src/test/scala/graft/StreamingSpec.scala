@@ -345,7 +345,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val docs = (0 until 8).map(i => graft.io.SyntheticCorpus.genDoc(i.toLong))
     val input = MemoryStream[graft.model.InputDoc]
-    val q = graft.streaming.ExtractStream.spans(input.toDS())
+    val q = graft.pipeline.Extract.spans(input.toDS())
       .writeStream.format("memory").queryName("xspans").outputMode("append").start()
     docs.grouped(3).foreach { b => input.addData(b); q.processAllAvailable() }
     val got = spark.table("xspans")
